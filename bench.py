@@ -27,6 +27,34 @@ from rgd_rnaseq_workflows_spark.registry import REGISTRY  # noqa: E402
 from rgd_rnaseq_workflows_spark.session import get_spark  # noqa: E402
 
 
+COMPACT_BUDGET = 1800      # characters of the final stdout line
+
+
+def compact_line(head: dict, timings: dict[str, float], pinned: list[str],
+                 budget: int = COMPACT_BUDGET) -> dict:
+    """``head`` plus a ``queries`` map of medians that fits ``budget``
+    characters as JSON: every pinned name first, then the slowest other
+    queries while they fit. Only that slowest-first fill is trimmed. When
+    the pinned names alone overflow, the medians lose decimals (3 down to
+    0) instead, so a pinned name is never evicted."""
+    names = [n for n in pinned if n in timings]
+    for digits in (3, 2, 1, 0):
+        line = dict(head, queries={n: round(timings[n], digits)
+                                   for n in names})
+        if len(json.dumps(line)) <= budget:
+            break
+    else:
+        return line
+    for name in sorted(timings, key=lambda n: -timings[n]):
+        if name in line["queries"]:
+            continue
+        line["queries"][name] = round(timings[name], digits)
+        if len(json.dumps(line)) > budget:
+            del line["queries"][name]
+            break
+    return line
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -218,12 +246,10 @@ def main() -> None:
             "n_high_cov_queries": len(noise["high_cov_queries"]),
             "record_suspect": noise["record_suspect"],
         },
-        "queries": {},
     }
     if noise["requalify"]["attempted"]:
         compact["noise"]["requalified_max_over_min"] = \
             noise["requalify"]["extra_pass_sentinel_max_over_min"]
-    budget = 1800
     # Deterministic headline set (r11 verdict task 3): the compact line
     # only fits ~45 of 220+ medians, so a purely slowest-first list
     # churns round over round and fabricates "dropped_from_bench"
@@ -231,23 +257,11 @@ def main() -> None:
     # repo) first, then fill any remaining budget slowest-first.
     pinned_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "bench_headline.json")
+    pinned: list[str] = []
     if os.path.exists(pinned_path):
         with open(pinned_path) as fh:
-            for name in json.load(fh):
-                if name in timings:
-                    compact["queries"][name] = timings[name]
-    for name in sorted(timings, key=lambda n: -timings[n]):
-        if name in compact["queries"]:
-            continue
-        compact["queries"][name] = timings[name]
-        if len(json.dumps(compact)) > budget:
-            del compact["queries"][name]
-            break
-    # safety valve: if the pinned set alone ever outgrows the budget,
-    # trim fastest-first so the slow (triage-relevant) entries survive
-    while len(json.dumps(compact)) > budget and compact["queries"]:
-        del compact["queries"][min(compact["queries"],
-                                   key=lambda n: compact["queries"][n])]
+            pinned = json.load(fh)
+    compact = compact_line(compact, timings, pinned)
     sys.stdout.flush()
     print(json.dumps(compact))
 

@@ -11,27 +11,38 @@ validation (full-outer null check, JN6).
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
 def validate_feature_alignment(long_df: DataFrame,
                                sample_col: str = "sample",
-                               feature_col: str = "feature_id") -> DataFrame:
+                               feature_col: str = "feature_id") -> list[str]:
     """JN6 validation — every sample must carry the identical feature set
     (the Perl builder's "Number of lines among samples are not equal!",
     ``dependencies/rsem-generate-data-matrix:46-54``).
 
-    Returns the (sample, n_features) table of offenders (empty = valid):
-    one aggregation, no N-way join.
+    Returns the sorted sample list, the column list a pivot needs, and
+    raises ``ValueError`` naming the offending samples. One action: a
+    ``rollup`` counts distinct features per sample and, in its grand-total
+    row, over all samples — no N-way join, no second job for the total.
     """
-    per_sample = long_df.groupBy(sample_col).agg(
-        F.countDistinct(feature_col).alias("n_features"))
-    n_total = long_df.select(feature_col).distinct().count()
-    return per_sample.filter(F.col("n_features") != n_total)
+    rows = (long_df.rollup(sample_col)
+            .agg(F.grouping(sample_col).alias("_total"),
+                 F.countDistinct(feature_col).alias("n_features"))
+            .collect())
+    n_total = next((r["n_features"] for r in rows if r["_total"]), 0)
+    per_sample = sorted((r[sample_col], r["n_features"])
+                        for r in rows if not r["_total"])
+    offenders = [s for s, n in per_sample if n != n_total]
+    if offenders:
+        raise ValueError(f"feature sets differ across samples: {offenders}")
+    return [s for s, _ in per_sample]
 
 
-def pivot_matrix(long_df: DataFrame, measure: str,
+def pivot_matrix(long_df: DataFrame, measure: str | Sequence[str],
                  sample_col: str = "sample",
                  feature_col: str = "feature_id",
                  samples: list[str] | None = None,
@@ -43,6 +54,11 @@ def pivot_matrix(long_df: DataFrame, measure: str,
     discover values, and column order would be nondeterministic.
     One shuffle on feature_id; ``first`` matches the reference's
     one-value-per-(sample, feature) grain.
+
+    ``measure`` may name several measures: one pivot pass then carries
+    all of them, sample ``s``'s column for measure ``m`` is named
+    ``f"{s}_{m}"`` (Spark's pivot naming), and :func:`matrix_measure`
+    projects one measure back out. Cache the wide frame to sink several.
 
     WIDTH CEILING: a pivot materializes one output column per sample, so
     driver plan size and row width grow linearly with sample count — wide
@@ -64,9 +80,23 @@ def pivot_matrix(long_df: DataFrame, measure: str,
             f"pivot_matrix: {len(samples)}+ distinct '{sample_col}' values "
             f"exceed max_width={max_width}; keep the long form (or pivot "
             f"an explicit samples slice) at this scale")
+    if isinstance(measure, str):
+        aggs = [F.first(measure)]
+    else:
+        aggs = [F.first(m).alias(m) for m in measure]
     return (long_df.groupBy(F.col(feature_col).alias("Symbol"))
             .pivot(sample_col, samples)
-            .agg(F.first(measure)))
+            .agg(*aggs))
+
+
+def matrix_measure(wide: DataFrame, measure: str,
+                   samples: list[str]) -> DataFrame:
+    """One measure of a several-measure :func:`pivot_matrix` frame, as a
+    plain ``Symbol`` + one column per sample matrix."""
+    def quoted(name: str) -> str:       # sample ids may hold dots
+        return "`" + name.replace("`", "``") + "`"
+    return wide.select("Symbol", *[F.col(quoted(f"{s}_{measure}")).alias(s)
+                                   for s in samples])
 
 
 def format_reference_matrix(wide: DataFrame, suffix: str = ".genes.results",

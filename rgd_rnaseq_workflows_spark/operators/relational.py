@@ -130,6 +130,14 @@ def order_by_source_file(df: DataFrame,
             .orderBy(alias))
 
 
+def sorted_report(df: DataFrame, *cols: str) -> DataFrame:
+    """SRT — a per-project report (one row per sample) sorted inside one
+    partition, the shape its single-file sink writes anyway. A global
+    ``orderBy`` would range-partition first: a sampling job plus a
+    shuffle, for a table of a few hundred rows."""
+    return df.coalesce(1).sortWithinPartitions(*cols)
+
+
 # --- dedup / per-group selection (SURVEY §2.4/2.5) ----------------------------
 
 def dedup_keep_first(df: DataFrame, key_cols: Sequence[str],

@@ -6,7 +6,8 @@ Reproduces the controller's sample bookkeeping
 - dedup to one row per GSM keeping the lexicographically-first Run
   (AGG4 ``sort -u -t$'\\t' -k2,2``, ``:362-366``) — pinned deterministic
 - PASS semi-join against the STARQC report (JN1, ``:429-431``)
-- PASS/FAIL/total stats + zero-PASS abort (AGG5, ``:434-449``)
+- zero-PASS abort on the written PASS list (AGG5, ``:434-449``); the
+  per-status counts ride on the STARQC sink (``plans.starqc``)
 - per-sample run grouping: all runs, first metadata (AGG2/AGG3, ``:281-290``)
 - ``unique_name = Tissue_Strain_Sex_GSM`` (PRJ3/F1, ``:286``)
 """
@@ -18,6 +19,8 @@ from pyspark.sql import functions as F
 
 from rgd_rnaseq_workflows_spark.operators.relational import (
     collect_group_list, dedup_keep_first, first_per_group, semi_join_filter)
+from rgd_rnaseq_workflows_spark.schemas import ACCLIST
+from rgd_rnaseq_workflows_spark.sources.tsv import write_tsv_observed
 
 
 class ZeroPassError(RuntimeError):
@@ -37,18 +40,28 @@ def unique_acclist(acclist: DataFrame) -> DataFrame:
 
 
 def pass_filter(unique_acc: DataFrame, starqc: DataFrame) -> DataFrame:
-    """JN1 — keep samples whose STARQC Status is PASS; abort on zero."""
+    """JN1 — keep samples whose STARQC Status is PASS."""
     pass_ids = (starqc.filter(F.col("Status") == "PASS")
                 .select(F.col("SampleID").alias("geo_accession")))
-    out = semi_join_filter(unique_acc, pass_ids, "geo_accession")
-    if out.limit(1).count() == 0:
+    return semi_join_filter(unique_acc, pass_ids, "geo_accession")
+
+
+def write_pass_list(passed: DataFrame, path: str) -> int:
+    """SNK1 + AGG5 — sink the PASS AccList and abort when it is empty.
+
+    Like the reference's ``wc -l`` on the list it just wrote
+    (``run_RNApipeline:434-449``), the guard reads the row count observed
+    on the write, so it costs no action of its own; the list is written
+    either way and the caller's completion marker is not. The column
+    order is pinned to the reference's (Run first): the equi-join moves
+    the key to the front, and the resume-path ``read_tsv`` parses by
+    POSITION against ``ACCLIST``."""
+    n = write_tsv_observed(passed.select(*[f.name for f in ACCLIST.fields]),
+                           path, {"n": F.count(F.lit(1))},
+                           single_file=True)["n"]
+    if n == 0:
         raise ZeroPassError("no samples passed STAR QC")
-    return out
-
-
-def qc_stats(starqc: DataFrame) -> DataFrame:
-    """AGG5 — per-status counts (the reference's wc-l arithmetic)."""
-    return starqc.groupBy("Status").agg(F.count("*").alias("n")).orderBy("Status")
+    return n
 
 
 def sample_groups(acclist: DataFrame) -> DataFrame:

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rgd_rnaseq_workflows_spark.functions.formatting import bc_div_scaled
+from rgd_rnaseq_workflows_spark.operators.relational import sorted_report
 
 SEX_GENES = ("Xist", "Uty", "Sry", "Ddx3y", "Kdm5d", "Eif2s3y")
 
@@ -37,11 +38,18 @@ def compute_sex(idxstats: DataFrame, input_sex: DataFrame,
     — with scaled integers X, Y that last step is exactly (X·10^6) div Y).
     The 40.0 threshold compares scaled integers, so boundary samples can't
     flip on double rounding.
+
+    Only samples with an ``input_sex`` row are called: ComputeSex_v5.sh
+    iterates the PASS AccList (``run_RNApipeline:461``), while FAILed
+    samples' idxstats files still sit in the same directory. The join
+    runs before the pivot, which then groups by (sample, InputSex): one
+    exchange, not a pivot exchange plus a join.
     """
     cov = (idxstats
            .filter(F.col("chrom").isin("chrX", "chrY"))
            .withColumn("cov", bc_div_scaled("mapped", "seq_length", _SCALE))
-           .groupBy("sample")
+           .join(input_sex, "sample")
+           .groupBy("sample", "InputSex")
            .pivot("chrom", ["chrX", "chrY"])
            .agg(F.first("cov")))
     ratio_scaled = F.when(F.col("chrY") == 0, F.lit(None)) \
@@ -54,14 +62,13 @@ def compute_sex(idxstats: DataFrame, input_sex: DataFrame,
                          > int(ratio_threshold * 10 ** _SCALE)),
                       "F").otherwise("M")
     out = (with_ratio
-           .join(input_sex, "sample", "left")
            .withColumn("ComputedSex", computed)
            .withColumn("Agreement",
                        F.when(F.col("InputSex") == F.col("ComputedSex"),
                               "Agree").otherwise("Conflict")))
-    return out.select(
+    return sorted_report(out.select(
         F.col("sample").alias("SampleID"), "InputSex", "ComputedSex",
-        "Ratio", "Agreement").orderBy("SampleID")
+        "Ratio", "Agreement"), "SampleID")
 
 
 def conflict_report(sex_result: DataFrame, expression_long: DataFrame,
@@ -83,7 +90,8 @@ def conflict_report(sex_result: DataFrame, expression_long: DataFrame,
                   .groupBy(F.col("sample").alias("SampleID"))
                   .pivot("feature_id", list(genes))
                   .agg(F.first("TPM")))
-    return (sex_result.join(slice_wide, "SampleID", how)
-            .select("SampleID", "InputSex", "ComputedSex",
-                    F.col("Ratio").alias("XYRatio"), "Agreement", *genes)
-            .orderBy("SampleID"))
+    return sorted_report(
+        sex_result.join(slice_wide, "SampleID", how)
+        .select("SampleID", "InputSex", "ComputedSex",
+                F.col("Ratio").alias("XYRatio"), "Agreement", *genes),
+        "SampleID")

@@ -1645,60 +1645,62 @@ def text_zipf_head_stats(spark, sf_dir):
 # prior round are surfaced first so every registry entry accumulates a
 # recorded pass; the remaining order is registration (module) order.
 _RECORD_FIRST: tuple[str, ...] = (
-    # round-11 window, regenerated from tools/rotation_check.py
-    # --plan after the batch-12 queries landed: the 12 never-
-    # stamped queries lead (4 early-r11 + 8 batch-12), then the
-    # stalest stamped rows fill the 50 slots oldest-first.
-    "stream_ccnet_keep",
-    "corpus_length_ks_drift",
-    "quality_classifier_calibration",
-    "corpus_shard_diff",
-    "profile_pareto_skyline",
-    "sft_assemble_conversations",
-    "embedding_isotropy",
-    "sample_greedy_maxcover",
-    "sample_kcenter_coreset",
-    "ann_hard_negatives",
-    "text_heaps_curve",
-    "agg_weighted_percentiles",
-    "text_lang_id",
-    "text_token_stats",
-    "text_fingerprint",
-    "ann_cosine_topk",
-    "ann_embedding_neardup",
-    "asof_join_events",
-    "range_join_dim",
-    "rollup_aggregate",
-    "agg_percentiles",
-    "agg_percentiles_approx",
-    "text_bpe_tokens",
-    "ann_ivf_topk",
-    "corpus_curation",
-    "skew_salted_agg",
-    "text_bm25_topk",
-    "quality_lm_buckets",
-    "sketch_hll_distinct",
-    "dsir_importance",
-    "dedup_passages",
-    "embedding_random_projection",
-    "bloom_semi_join",
-    "sketch_hll_by_group",
-    "dedup_passage_rewrite",
-    "tokenizer_bpe_encode",
-    "sketch_cms_heavy_hitters",
-    "snapshot_apply_merge",
-    "graph_pagerank_neardup",
-    "sketch_log2_quantiles",
-    "rag_chunk_documents",
-    "winnow_partial_overlap",
-    "sample_pps_systematic",
-    "graph_kcore_filter",
-    "linkage_golden_records",
-    "quality_quantile_norm",
-    "split_semantic_leakage",
-    "profile_expectations",
-    "prj3_computed_projection",
-    "fil4_threshold_status",
+    # round-13 window, regenerated from tools/rotation_check.py
+    # --plan: the 25 never-stamped queries lead, then the
+    # stalest stamped rows (r8) fill the 50 slots oldest-first.
+    # r12 re-recorded r11's window, so 98 rows are older than the
+    # 3-round rule allows; one 50-row window cannot hold them
+    # all, and the rotation drains them over the next rounds.
+    "ann_hard_negatives_ivf",
+    "pack_padding_report",
+    "profile_l_diversity",
+    "sample_neyman_allocation",
+    "dedup_minhash_diversity",
+    "dedup_source_overlap",
+    "profile_join_explosion",
+    "profile_mutual_information",
+    "quality_classifier_train",
+    "cluster_label_silhouette",
+    "dedup_priority_keepers",
+    "text_hill_tail_index",
+    "sample_bootstrap_ci",
+    "profile_benford_audit",
+    "events_disorder_report",
+    "profile_group_trend",
+    "profile_dp_noisy_counts",
+    "graph_assortativity",
+    "graph_lpa_communities",
+    "events_funnel_wilson",
+    "quality_conformal_threshold",
+    "basket_association_rules",
+    "events_cusum_changepoint",
+    "text_readability",
+    "profile_t_closeness",
+    "fil6_regex_predicates",
+    "fil8_in_list_slice",
+    "f13_case_buckets",
+    "jn1_semi_join",
+    "set3_anti_join",
+    "jn2_broadcast_annotate",
+    "jn5_lookup_default",
+    "jn6_outer_validation",
+    "agg1_count_distinct",
+    "agg2_collect_sorted_list",
+    "agg3_first_per_group",
+    "agg4_dedup_keep_first",
+    "agg9_histogram",
+    "win1_dense_rank_palette",
+    "win2_topk_per_group",
+    "set1_union",
+    "set2_intersect",
+    "stream_sliding_topk",
+    "stratified_hash_sample",
+    "contamination_ngram",
+    "text_redact_pii",
+    "kmeans_embeddings",
+    "semdedup_embeddings",
+    "quality_repetition",
+    "dedup_ngram_coverage",
 )
 
 

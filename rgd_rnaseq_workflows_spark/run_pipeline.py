@@ -22,12 +22,13 @@ import sys
 from pyspark.sql import functions as F
 
 from rgd_rnaseq_workflows_spark.plans.acclist import (
-    pass_filter, qc_stats, unique_acclist)
+    pass_filter, unique_acclist, write_pass_list)
 from rgd_rnaseq_workflows_spark.plans.orchestrator import Orchestrator, ProjectRun, Stage
 from rgd_rnaseq_workflows_spark.plans.sexcheck import compute_sex, conflict_report
-from rgd_rnaseq_workflows_spark.plans.starqc import starqc_summary
+from rgd_rnaseq_workflows_spark.plans.starqc import (
+    starqc_summary, write_starqc_summary)
 from rgd_rnaseq_workflows_spark.operators.matrix import (
-    pivot_matrix, validate_feature_alignment)
+    matrix_measure, pivot_matrix, validate_feature_alignment)
 from rgd_rnaseq_workflows_spark.schemas import ACCLIST
 from rgd_rnaseq_workflows_spark.session import get_spark
 from rgd_rnaseq_workflows_spark.sources.idxstats import read_idxstats
@@ -164,70 +165,54 @@ def _run(spark, args: argparse.Namespace) -> int:
             state["expr"] = expr.join(passed_ids, "sample", "left_semi")
         return state["expr"]
 
+    # Each stage spends one Spark action per artifact it writes; side
+    # statistics (status counts, the zero-PASS guard) are observed on
+    # those writes rather than computed by actions of their own.
     def stage_starqc():
         kv = read_star_logs(spark, args.star_logs,
                             sample_pattern=r"([^/]+)/Log\.final\.out$")
         qc = starqc_summary(kv, expected).cache()
         state["qc"] = qc
-        # sink under the reference's exact header (pSTARQC_v1.sh:63:
-        # "SampleID input_reads unaligned_reads Unmapped_Rate Status");
-        # internal names stay typed — the resume-path read_tsv parses by
-        # position against STARQC_SUMMARY, so the alias is sink-only
-        write_tsv(qc.select(F.col("SampleID"),
-                            F.col("Input_Reads").alias("input_reads"),
-                            F.col("Unmapped_Total").alias("unaligned_reads"),
-                            "Unmapped_Rate", "Status"),
-                  f"{out}/STAR_Align_sum", single_file=True,
-                  sentinel_map={"input_reads": "NA", "unaligned_reads": "NA",
-                                "Unmapped_Rate": "NA"},
-                  float_format={"Unmapped_Rate": 2})
-        stats = {r["Status"]: r["n"] for r in qc_stats(qc).collect()}
+        stats = write_starqc_summary(qc, f"{out}/STAR_Align_sum")
         print(f"[starqc] {stats}", file=sys.stderr)
 
     def stage_pass():
         passed = pass_filter(unique, get_qc()).cache()
         state["passed"] = passed
-        # pin the reference's column order (Run first): the equi-join moves
-        # the join key to the front, and the resume-path read_tsv parses by
-        # POSITION against the ACCLIST schema
-        write_tsv(passed.select(*[f.name for f in ACCLIST.fields]),
-                  f"{out}/Unique_AccList_PASS", single_file=True)
+        write_pass_list(passed, f"{out}/Unique_AccList_PASS")
+
+    def write_matrices(long_df, prefix):
+        # the alignment check runs (and fails) before either matrix is
+        # written; its one collect also yields the pivot column list
+        samples = validate_feature_alignment(long_df)
+        measures = {"TPM": "TPM", "counts": "expected_count"}
+        wide = pivot_matrix(long_df, list(measures.values()),
+                            samples=samples).cache()
+        for name, measure in measures.items():
+            write_tsv(matrix_measure(wide, measure, samples),
+                      f"{out}/{prefix}_{name}", single_file=True)
+        wide.unpersist()
 
     def stage_matrix():
         expr = get_expr().cache()
-        bad = validate_feature_alignment(expr)
-        offenders = [r["sample"] for r in bad.collect()]
-        if offenders:
-            raise RuntimeError(
-                f"feature sets differ across samples: {offenders}")
         state["expr"] = expr
-        write_tsv(pivot_matrix(expr, "TPM"),
-                  f"{out}/GeneMat_TPM", single_file=True)
-        write_tsv(pivot_matrix(expr, "expected_count"),
-                  f"{out}/GeneMat_counts", single_file=True)
+        write_matrices(expr, "GeneMat")
         if args.rsem_tx:
             tx = read_rsem_results(spark, args.rsem_tx, isoforms=True)
             passed_ids = get_passed().select(
                 F.col("geo_accession").alias("sample"))
-            tx = tx.join(passed_ids, "sample", "left_semi").cache()
-            write_tsv(pivot_matrix(tx, "TPM"),
-                      f"{out}/TxMat_TPM", single_file=True)
-            write_tsv(pivot_matrix(tx, "expected_count"),
-                      f"{out}/TxMat_counts", single_file=True)
+            write_matrices(tx.join(passed_ids, "sample", "left_semi").cache(),
+                           "TxMat")
 
     def stage_sex():
         if not args.idxstats:
             raise RuntimeError("no idxstats provided")
-        # ComputeSex_v5.sh iterates the PASS AccList only
-        # (run_RNApipeline:461): FAILed samples' idxstats files still exist
-        # on disk, so the glob must be semi-joined down to PASS samples or
-        # the sex table grows rows the reference never emits.
+        # compute_sex calls only the samples of input_sex, the PASS list
         input_sex = get_passed().select(
             F.col("geo_accession").alias("sample"),
             F.col("Sex").alias("InputSex"))
-        idx = read_idxstats(spark, args.idxstats).join(
-            input_sex.select("sample"), "sample", "left_semi")
-        sex = compute_sex(idx, input_sex).cache()
+        sex = compute_sex(read_idxstats(spark, args.idxstats),
+                          input_sex).cache()
         state["sex"] = sex
         write_tsv(sex, f"{out}/sex_result", single_file=True,
                   sentinel_map={"Ratio": "Inf"}, bc_format={"Ratio": 6})
@@ -399,7 +384,9 @@ def _run(spark, args: argparse.Namespace) -> int:
         # QC and matrices stay marker-skipped, like the reference.
         for st in ("pass", "sex", "tracks"):
             orch.clear(args.project, st)
-    run_ = ProjectRun(args.project, unique.count(), stages)
+    # run_project never reads the sample count, and counting would cost
+    # a Spark job; the first stage to use ``unique`` fills its cache
+    run_ = ProjectRun(args.project, 0, stages)
     ok = orch.run_project(run_)
     for entry in orch.log:
         print(f"[orchestrator] {entry}", file=sys.stderr)

@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from rgd_rnaseq_workflows_spark.sources.tsv import glob_source
+
 IDXSTATS_FILE = T.StructType([
     T.StructField("chrom", T.StringType()),
     T.StructField("seq_length", T.LongType()),
@@ -24,7 +26,9 @@ IDXSTATS_FILE = T.StructType([
 def read_idxstats(spark: SparkSession, glob_path: str,
                   sample_pattern: str = r"([^/]+)\.idxstats$") -> DataFrame:
     """Read per-sample idxstats TSVs (no header, 4 cols) into the D4 table."""
-    df = (spark.read.option("sep", "\t").schema(IDXSTATS_FILE).csv(glob_path)
+    path, options = glob_source(spark, glob_path)
+    df = (spark.read.option("sep", "\t").options(**options)
+          .schema(IDXSTATS_FILE).csv(path)
           .withColumn("sample",
                       F.regexp_extract(F.input_file_name(), sample_pattern, 1)))
     return df.select("sample", "chrom", "seq_length", "mapped", "unmapped")

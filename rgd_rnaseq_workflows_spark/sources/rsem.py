@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from rgd_rnaseq_workflows_spark.schemas import (
     EXPRESSION_LONG, RSEM_GENES, RSEM_ISOFORMS)
+from rgd_rnaseq_workflows_spark.sources.tsv import glob_source
 
 
 def read_rsem_results(spark: SparkSession, glob_path: str,
@@ -36,8 +37,9 @@ def read_rsem_results(spark: SparkSession, glob_path: str,
     schema = RSEM_ISOFORMS if isoforms else RSEM_GENES
     if isoforms and feature_col == "gene_id":
         feature_col = RSEM_ISOFORMS.fields[0].name
+    path, options = glob_source(spark, glob_path)
     df = (spark.read.option("sep", "\t").option("header", True)
-          .schema(schema).csv(glob_path)
+          .options(**options).schema(schema).csv(path)
           .withColumn("_path", F.input_file_name()))
     sample = F.regexp_replace(
         F.element_at(F.split(F.col("_path"), "/"), -1),

@@ -15,11 +15,55 @@ Reference behavior being reproduced (citations into /root/reference/):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import fnmatch
+import os
+from urllib.parse import urlparse
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 DEFAULT_SENTINELS = ("NA", "Inf", "Unknown", "")
+
+
+def glob_source(spark: SparkSession,
+                path: str | list[str]) -> tuple[str | list[str], dict]:
+    """``(path, reader options)`` for scanning the files ``path`` names.
+
+    A glob whose only wildcards (``*``/``?``) sit in the file name, over a
+    local directory with no subdirectories and at least one visible match,
+    becomes the directory plus ``pathGlobFilter``. Spark then lists one
+    directory on the driver; handed the glob, it lists every matched file
+    again, and above ``parallelPartitionDiscovery.threshold`` (32) paths
+    that listing is a Spark job. Anything else — a list of paths, a
+    wildcard in a directory component, a remote filesystem, a directory
+    with subdirectories or a glob with no match — passes through
+    unchanged, so a glob that matches nothing still fails as before
+    instead of reading an empty directory scan."""
+    if not isinstance(path, str):
+        return path, {}
+    directory, pattern = os.path.split(path)
+    # fnmatch agrees with Hadoop's glob on * and ? only
+    if (not set("*?") & set(pattern) or set("[]{}\\") & set(pattern)
+            or set("*?[]{}") & set(directory)):
+        return path, {}
+    url = urlparse(directory)
+    default_fs = spark.sparkContext._jsc.hadoopConfiguration().get(
+        "fs.defaultFS", "file:///")
+    if url.scheme not in ("", "file") or (
+            not url.scheme and not default_fs.startswith("file:")):
+        return path, {}
+    try:
+        entries = list(os.scandir(url.path))
+    except OSError:
+        return path, {}
+    # Spark skips names starting with "_" or "." in both listings
+    visible = [e for e in entries if not e.name.startswith(("_", "."))]
+    if (any(e.is_dir() for e in entries)
+            or not any(fnmatch.fnmatchcase(e.name, pattern)
+                       for e in visible)):
+        return path, {}
+    return directory, {"pathGlobFilter": pattern}
 
 
 def read_tsv(spark: SparkSession, path: str, schema: T.StructType,
@@ -83,6 +127,17 @@ def write_tsv(df: DataFrame, path: str,
         out = out.coalesce(1)
     (out.write.mode("overwrite").option("sep", "\t").option("header", True)
      .option("emptyValue", "").csv(path))
+
+
+def write_tsv_observed(df: DataFrame, path: str,
+                       metrics: dict[str, Column], **kwargs) -> dict:
+    """:func:`write_tsv` that also returns ``metrics`` (name → aggregate
+    expression) over the written rows. A ``df.observe`` on the write
+    computes them, so the statistics cost no second Spark action."""
+    obs = Observation()
+    write_tsv(df.observe(obs, *[c.alias(k) for k, c in metrics.items()]),
+              path, **kwargs)
+    return obs.get
 
 
 def promote_single_part(part_dir: str, target_path: str,

@@ -2,10 +2,11 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from rgd_rnaseq_workflows_spark.operators.matrix import (
-    pivot_matrix, unpivot_matrix, validate_feature_alignment)
+    matrix_measure, pivot_matrix, unpivot_matrix, validate_feature_alignment)
 
 
 def _long(spark):
@@ -49,12 +50,46 @@ def test_validation_catches_missing_feature(spark):
     # the Perl builder's "Number of lines among samples are not equal!"
     long_df = _long(spark).filter(
         ~((F.col("sample") == "s2") & (F.col("feature_id") == "Sry")))
-    offenders = validate_feature_alignment(long_df)
-    assert [r["sample"] for r in offenders.collect()] == ["s2"]
+    with pytest.raises(ValueError, match=r"differ across samples: \['s2'\]"):
+        validate_feature_alignment(long_df)
+
+
+def test_validation_catches_same_size_different_set(spark):
+    # equal per-sample counts, different sets: only the total can tell
+    long_df = _long(spark).withColumn(
+        "feature_id", F.when((F.col("sample") == "s3")
+                             & (F.col("feature_id") == "Sry"), "Ddx3y")
+        .otherwise(F.col("feature_id")))
+    with pytest.raises(ValueError,
+                       match=r"\['s1', 's2', 's3'\]"):
+        validate_feature_alignment(long_df)
 
 
 def test_validation_passes_aligned(spark):
-    assert validate_feature_alignment(_long(spark)).count() == 0
+    # the sample list it returns is the pivot's column list
+    assert validate_feature_alignment(_long(spark)) == ["s1", "s2", "s3"]
+
+
+def test_one_pivot_pass_carries_both_measures(spark):
+    long_df = _long(spark)
+    samples = validate_feature_alignment(long_df)
+    wide = pivot_matrix(long_df, ["TPM", "expected_count"], samples=samples)
+    for measure in ("TPM", "expected_count"):
+        got = matrix_measure(wide, measure, samples)
+        want = pivot_matrix(long_df, measure, samples=samples)
+        assert got.columns == want.columns == ["Symbol", *samples]
+        assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_matrix_measure_quotes_dotted_sample_ids(spark):
+    long_df = _long(spark).withColumn(
+        "sample", F.concat(F.col("sample"), F.lit(".v1")))
+    wide = pivot_matrix(long_df, ["TPM", "expected_count"],
+                        samples=["s1.v1", "s2.v1", "s3.v1"])
+    rows = {r["Symbol"]: r for r in
+            matrix_measure(wide, "TPM", ["s1.v1", "s2.v1", "s3.v1"])
+            .collect()}
+    assert rows["Uty"]["s2.v1"] == 2.0
 
 
 def test_pivot_width_ceiling(spark):

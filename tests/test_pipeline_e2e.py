@@ -92,7 +92,7 @@ def test_full_pipeline(spark, tmp_out):
 
     # stage 8-9: RSEM long form → validation → 2 matrices + conflict report
     expr = read_rsem_results(spark, f"{tmp_out}/rsem/*.genes.results")
-    assert validate_feature_alignment(expr).count() == 0
+    assert validate_feature_alignment(expr) == ["GSM1", "GSM2"]
     tpm = pivot_matrix(expr, "TPM")
     counts = pivot_matrix(expr, "expected_count")
     assert tpm.columns == ["Symbol", "GSM1", "GSM2"]

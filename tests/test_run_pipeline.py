@@ -319,3 +319,92 @@ def test_cli_regen_sex_json_after_manual_correction(spark, tmp_out):
                   and (i == 0 or _argv(tmp_out, out)[i - 1] != "--idxstats")]
     with pytest.raises(SystemExit):
         run_pipeline.main(argv_noidx + ["--regen-sex-json"])
+
+
+def _stage_log(capsys):
+    return [line for line in capsys.readouterr().err.splitlines()
+            if line.startswith("[orchestrator]")]
+
+
+def test_cli_zero_pass_stops_before_downstream(spark, tmp_out, capsys):
+    """No sample passes STAR QC: the zero-PASS guard (observed on the
+    PASS-list write) fails the critical pass stage, so main returns 1,
+    no pass marker is written and no downstream stage runs."""
+    _fixtures(tmp_out)
+    for gsm in ("GSM1", "GSM3"):                    # GSM2 already fails
+        with open(f"{tmp_out}/logs/{gsm}/Log.final.out", "w") as f:
+            f.write("  Number of input reads |\t10,000\n"
+                    "  Number of reads unmapped: too many mismatches |\t9000\n"
+                    "  Number of reads unmapped: too short |\t0\n"
+                    "  Number of reads unmapped: other |\t0\n")
+    out = f"{tmp_out}/out"
+    assert run_pipeline.main(_argv(tmp_out, out)) == 1
+    assert os.listdir(f"{out}/.markers") == ["PRJT.starqc_complete"]
+    assert any("'pass', 'failed: no samples passed STAR QC'" in line
+               for line in _stage_log(capsys))
+    assert not os.path.exists(f"{out}/GeneMat_TPM")
+    assert not os.path.exists(f"{out}/sex_result")
+
+
+def test_cli_feature_set_mismatch_fails_matrix_before_writing(
+        spark, tmp_out, capsys):
+    """A sample whose RSEM feature set differs fails the matrix stage
+    with the offender named, and neither GeneMat matrix is written."""
+    _fixtures(tmp_out)
+    path = f"{tmp_out}/rsem/GSM3.genes.results"
+    with open(path) as f:
+        lines = f.read().splitlines()
+    with open(path, "w") as f:                      # GSM3 loses Actb
+        f.write("\n".join(lines[:-1]) + "\n")
+    out = f"{tmp_out}/out"
+    assert run_pipeline.main(_argv(tmp_out, out)) == 1
+    assert any("'matrix', \"failed: feature sets differ across samples: "
+               "['GSM3']\"" in line for line in _stage_log(capsys))
+    assert not os.path.exists(f"{out}/GeneMat_TPM")
+    assert not os.path.exists(f"{out}/GeneMat_counts")
+    assert not os.path.exists(f"{out}/.markers/PRJT.matrix_complete")
+
+
+def test_cli_glob_matching_no_file_fails(spark, tmp_out, capsys):
+    """An RSEM or idxstats glob over an existing directory that matches no
+    file fails its stage as a missing path; it never yields an empty
+    matrix or sex table."""
+    _fixtures(tmp_out)
+    out = f"{tmp_out}/out_rsem"
+    argv = _argv(tmp_out, out)
+    argv[argv.index("--rsem") + 1] = f"{tmp_out}/rsem/*.isoforms.results"
+    assert run_pipeline.main(argv) == 1
+    assert any("'matrix', 'failed: [PATH_NOT_FOUND]" in line
+               for line in _stage_log(capsys))
+    assert not os.path.exists(f"{out}/GeneMat_TPM")
+
+    out = f"{tmp_out}/out_idx"
+    argv = _argv(tmp_out, out)
+    argv[argv.index("--idxstats") + 1] = f"{tmp_out}/idx/*.idx"
+    assert run_pipeline.main(argv) == 0             # sex is non-critical
+    assert any("'sex', 'failed: [PATH_NOT_FOUND]" in line
+               for line in _stage_log(capsys))
+    assert not os.path.exists(f"{out}/sex_result")
+    assert not os.path.exists(f"{out}/.markers/PRJT.sex_complete")
+
+
+# Spark jobs of one run on the 3-sample fixture. Each stage spends one
+# action per artifact it writes; under adaptive execution an action is
+# one job per shuffle or cache it materializes, plus its result job.
+# A side action (a count, a probe, a discovery collect) raises this.
+MAX_PIPELINE_JOBS = 31
+
+
+def test_cli_job_count(spark, tmp_out):
+    _fixtures(tmp_out)
+    sc = spark.sparkContext
+    group = f"job-count-{os.getpid()}"
+    sc.setJobGroup(group, "run_pipeline job count")
+    try:
+        assert run_pipeline.main(_argv(tmp_out, f"{tmp_out}/out")) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n <= MAX_PIPELINE_JOBS, (
+        f"run_pipeline ran {n} Spark jobs (bound {MAX_PIPELINE_JOBS})")

@@ -66,3 +66,13 @@ def test_conflict_report_gene_slice(spark):
     assert row["GSM1"]["Xist"] == 10.0
     assert row["GSM2"]["Eif2s3y"] == 25.0
     assert "Actb" not in cols
+
+
+def test_compute_sex_calls_only_input_samples(spark):
+    # a FAILed sample's idxstats still sit beside the PASS ones
+    # (run_RNApipeline:461 iterates the PASS AccList only)
+    extra = spark.createDataFrame(
+        [("GSM9", "chrX", 1000, 100, 0), ("GSM9", "chrY", 1000, 100, 0)],
+        ["sample", "chrom", "seq_length", "mapped", "unmapped"])
+    out = compute_sex(_idxstats(spark).unionByName(extra), _input_sex(spark))
+    assert [r["SampleID"] for r in out.collect()] == ["GSM1", "GSM2", "GSM3"]

@@ -103,3 +103,57 @@ def test_write_tsv_bc_format_bytes(spark, tmp_out):
     lines = open(part).read().strip().split("\n")
     assert lines[1:] == ["a\t2.500000", "b\t.000249", "c\t0",
                          "d\tInf", "e\t41.666666"]
+
+
+def test_glob_source_reads_file_name_glob_as_directory(spark, tmp_out):
+    """A glob whose only wildcard is in the file name is read as its
+    directory plus pathGlobFilter; every other shape passes through."""
+    from rgd_rnaseq_workflows_spark.sources.tsv import glob_source
+    d = os.path.join(tmp_out, "rsem")
+    os.makedirs(d)
+    for name in ("GSM1.genes.results", "GSM2.genes.results", "notes.txt",
+                 ".GSMX.genes.results"):
+        open(os.path.join(d, name), "w").close()
+    assert glob_source(spark, f"{d}/*.genes.results") == \
+        (d, {"pathGlobFilter": "*.genes.results"})
+    assert glob_source(spark, f"file://{d}/GSM?.genes.results") == \
+        (f"file://{d}", {"pathGlobFilter": "GSM?.genes.results"})
+    unchanged = [
+        [f"{d}/GSM1.genes.results", f"{d}/GSM2.genes.results"],  # a list
+        f"{d}/GSM1.genes.results",                  # no wildcard
+        f"{tmp_out}/*/GSM1.genes.results",          # wildcard in a dir
+        f"{d}/GSM[12].genes.results",               # beyond * and ?
+        f"{d}/*.isoforms.results",                  # matches nothing
+        f"{d}/.*.genes.results",                    # only a hidden match
+        f"{tmp_out}/missing/*.genes.results",       # no such directory
+        f"hdfs://nn/{d}/*.genes.results",           # not local
+    ]
+    for path in unchanged:
+        assert glob_source(spark, path) == (path, {}), path
+    # a subdirectory (RSEM's <sample>.stat/) keeps the plain glob, so
+    # nothing below the directory is ever read
+    os.makedirs(os.path.join(d, "GSM1.stat"))
+    assert glob_source(spark, f"{d}/*.genes.results") == \
+        (f"{d}/*.genes.results", {})
+
+
+def test_rsem_and_idxstats_readers_skip_subdirectories(spark, tmp_out):
+    """Both readers see the same files through either listing path: the
+    matched top-level files only, never files in a subdirectory."""
+    d = os.path.join(tmp_out, "in")
+    os.makedirs(os.path.join(d, "GSM9.stat"))
+    for sample in ("GSMA", "GSMB"):
+        with open(os.path.join(d, f"{sample}.genes.results"), "w") as f:
+            f.write(RSEM_HEADER + "Xist\tNM_1\t1000\t900\t5.00\t1.00\t8.0\n")
+        with open(os.path.join(d, f"{sample}.idxstats"), "w") as f:
+            f.write("chrX\t1000\t20\t0\n")
+    with open(os.path.join(d, "GSM9.stat", "GSM9.genes.results"), "w") as f:
+        f.write(RSEM_HEADER + "Xist\tNM_1\t1000\t900\t5.00\t1.00\t8.0\n")
+    import shutil
+    for subdir in (True, False):
+        if not subdir:
+            shutil.rmtree(os.path.join(d, "GSM9.stat"))
+        rsem = read_rsem_results(spark, f"{d}/*.genes.results")
+        assert sorted(r["sample"] for r in rsem.collect()) == ["GSMA", "GSMB"]
+        idx = read_idxstats(spark, f"{d}/*.idxstats")
+        assert sorted(r["sample"] for r in idx.collect()) == ["GSMA", "GSMB"]

@@ -9,7 +9,8 @@ from __future__ import annotations
 
 import os
 
-from rgd_rnaseq_workflows_spark.plans.starqc import KEYS, starqc_summary
+from rgd_rnaseq_workflows_spark.plans.starqc import (
+    KEYS, starqc_summary, write_starqc_summary)
 from rgd_rnaseq_workflows_spark.sources.star_log import read_star_logs
 
 LOG_TEMPLATE = """\
@@ -62,3 +63,23 @@ def test_kv_scan_trims_and_decommas(spark, tmp_out):
     vals = {r["key"]: r["value"] for r in kv.collect()}
     assert vals[KEYS[0]] == "5000"
     assert all(k == k.strip() for k in vals)
+
+
+def test_write_starqc_summary_counts(spark, tmp_out):
+    """AGG5: the per-status counts (the reference's wc -l arithmetic) are
+    observed on the summary's own write, statuses with no row left out,
+    and the sink keeps the reference header and row order."""
+    import glob
+    _write_log(tmp_out, "GSM2", "1,000", "10", "0", "0")        # PASS
+    _write_log(tmp_out, "GSM1", "1,000", "900", "0", "0")       # FAIL
+    _write_log(tmp_out, "GSM3", "1,000", "10", "0", "0")        # PASS
+    kv = read_star_logs(spark, f"{tmp_out}/*/Log.final.out")
+    summary = starqc_summary(kv, _expected(spark, ["GSM3", "GSM1", "GSM2"]))
+    counts = write_starqc_summary(summary, f"{tmp_out}/sum")
+    assert counts == {"FAIL": 1, "PASS": 2}
+    [part] = glob.glob(f"{tmp_out}/sum/part-*.csv")
+    lines = open(part).read().split("\n")
+    assert lines[0] == ("SampleID\tinput_reads\tunaligned_reads\t"
+                        "Unmapped_Rate\tStatus")
+    assert [line.split("\t")[0] for line in lines[1:4]] == \
+        ["GSM1", "GSM2", "GSM3"]
